@@ -450,9 +450,6 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     distributedly, never materialized on the driver.  A driver list is
     embedded into every task binary — ~8 MB at 1.2M seeds, a
     cores-independent cost the N-vs-4N ladder measures directly)."""
-    import time as _time
-
-    _t = _time.time()
     adapter = fetch_adapter or SynthWebAdapter(web)
     fmt = get_table_format(spark)
     if isinstance(seeds, DataFrame):
@@ -499,13 +496,6 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
         "url_canon", "url_hash", "host", "host_bucket",
         "priority", "depth", "discovered_epoch",
     ).dropDuplicates(["url_canon"]).cache()
-    if os.environ.get("SPARK_GRAFT_TRACE"):
-        # sub-stage attribution (trace only): the caches make the split
-        # jobs sum to the same work the fused job would do
-        c_cached.count()
-        _t = _trace("seed-plan/canonicalize", _t)
-        robots.count()
-        _t = _trace("seed-plan/robots", _t)
     bucket_rows = frontier.groupBy("host_bucket").count().collect()
     buckets = sorted(r.host_bucket for r in bucket_rows)
     # manifest count = the seeded FRONTIER (canonicalized, deduped,
@@ -514,7 +504,6 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     # raw pre-filter list length for the list path, as earlier rounds did,
     # made the same crawl seeded two ways write different manifests.)
     n_seeds = sum(r["count"] for r in bucket_rows)
-    _t = _trace("seed-plan", _t)
 
     d = _snap_dir(root, -1)
     # independent tables written concurrently, same pattern as the epoch
@@ -536,7 +525,6 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     frontier.unpersist()
     c_cached.unpersist()
     robots.unpersist()
-    _t = _trace("seed-writes", _t)
     with open(_manifest_path(root, -1), "w") as f:
         json.dump(
             {
@@ -1098,16 +1086,6 @@ def read_robots(spark: SparkSession, root: str, upto_epoch: int) -> DataFrame:
     )
 
 
-def _trace(label: str, t0: float) -> float:
-    import sys
-    import time
-
-    t = time.time()
-    if os.environ.get("SPARK_GRAFT_TRACE"):
-        print(f"[epoch-trace] {label}: {t - t0:.2f}s", file=sys.stderr)
-    return t
-
-
 # ---------------------------------------------------------------------------
 # the epoch
 # ---------------------------------------------------------------------------
@@ -1116,9 +1094,6 @@ def _trace(label: str, t0: float) -> float:
 def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
               cfg: CrawlConfig, fetch_adapter=None) -> int:
     """Run one BSP epoch; returns number of URLs fetched."""
-    import time as _time
-
-    _t = _time.time()
     fmt = get_table_format(spark)
     prev = _snap_dir(root, epoch - 1)
     refs = _frontier_refs(root, epoch - 1)
@@ -1137,7 +1112,6 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
     # count() action; the selected cache materializes inside the fetch job
     selected, n_selected = _assign_global_seq(spark, pol)
     selected = selected.cache()
-    _t = _trace("select", _t)
     if n_selected == 0:
         selected.unpersist()
         pol.unpersist()
@@ -1151,7 +1125,7 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
     try:
         return _run_epoch_body(
             spark, root, epoch, web, cfg, refs, robots, filters,
-            url_seen, host_tokens, selected, n_selected, _caches, _t, fmt,
+            url_seen, host_tokens, selected, n_selected, _caches, fmt,
             fetch_adapter,
         )
     finally:
@@ -1161,7 +1135,7 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
 
 def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
                     url_seen, host_tokens, selected, n_selected, _caches,
-                    _t, fmt, fetch_adapter=None):
+                    fmt, fetch_adapter=None):
     # ---- fetch + parse (S4, Arrow-batched, spread by url_hash) ---------
     fetch_fn, fetch_schema = _fetch_udf(web, fetch_adapter)
     # Task count is a function of DATA SIZE (one task per ~50k URLs — the
@@ -1178,6 +1152,9 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
                   n_selected // 50_000 + 1)
     if cfg.fetch_partitions is not None:
         n_fetch = min(cfg.fetch_partitions, n_fetch)
+    # cache: the fetch output feeds the fetch log, the link discoveries and
+    # the metrics.  The dirty-bucket collect below materializes it inside
+    # its own job, so fetching costs no separate driver action.
     fetched = (
         selected.select("url_canon", "url_hash", "host", "host_bucket", "seq", "depth")
         .repartition(n_fetch, "url_hash")
@@ -1186,14 +1163,6 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
         .cache()
     )
     _caches.append(fetched)
-    if os.environ.get("SPARK_GRAFT_TRACE"):
-        # trace-only materialization: attribute fetch separately.  The
-        # normal path lets the dirty/fingerprint collect below materialize
-        # this cache inside its own job — one fewer driver action per
-        # epoch (each action costs ~0.4-0.5 s of serial plan+submit, a
-        # cores-independent term the N-vs-4N ladder bills to the wide leg)
-        fetched.count()
-        _t = _trace("fetch+parse", _t)
 
     fetch_log = fetched.select(
         F.lit(epoch).alias("epoch"), "seq", "url_canon", "host",
@@ -1264,14 +1233,6 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
     )
     vetted = definitely_new.unionByName(survived).cache()
     _caches.append(vetted)
-    if os.environ.get("SPARK_GRAFT_TRACE"):
-        # sub-stage attribution (trace only; caches keep total work equal):
-        # discovery canonicalize + new-host robots, then cuckoo cogroup +
-        # exact anti-join vetting, then the dirty-bucket collect remainder
-        robots_new.count()
-        _t = _trace("plan-delta/canon+robots", _t)
-        vetted.count()
-        _t = _trace("plan-delta/cuckoo+vet", _t)
 
     # ---- delta merge: rewrite DIRTY buckets only -------------------------
     # ONE job collects both per-bucket facts the driver needs this epoch:
@@ -1299,7 +1260,6 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
         # chain stays short and old snapshots can be expired
         dirty = sorted(set(refs) | set(dirty))
         new_refs = {b: epoch for b in dirty}
-    _t = _trace("plan-delta", _t)
 
     old_dirty = read_frontier(spark, root, epoch - 1, buckets=dirty)
     frontier_dirty = (
@@ -1365,7 +1325,6 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
         for fut in futs:
             fut.result()  # propagate failures before the manifest exists
 
-    _t = _trace("snapshot-writes", _t)
     with open(_manifest_path(root, epoch), "w") as f:
         json.dump(
             {
@@ -1378,7 +1337,6 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
             },
             f,
         )
-    _t = _trace("manifest", _t)
     return n_selected
 
 

@@ -17,8 +17,9 @@ Relational re-expression of ``Node.find_all``
 * P4 dimensions filter: drop width/height attribute hits (samples.py:37).
 
 Scale notes: the values side is tiny (sample leaves) and is broadcast; the
-ancestor self-join stays within a page (equi-join on page_id, broadcast-able
-because match output is small); filters push to the parquet scan of nodes.
+ancestor promotion is a row-local explode of each direct match's
+``text_anc_ids`` (computed per page by the parser), so it adds no join and
+no exchange; filters push to the parquet scan of nodes.
 """
 from __future__ import annotations
 

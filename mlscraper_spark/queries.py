@@ -296,12 +296,14 @@ def q04_shuffle_join(spark, sf_dir):
     """J1-J4 analog: large-side shuffle join keyed by orderkey.
 
     r6 shape (guide §2.3 "aggregate before you shuffle"): lineitem is
-    pre-aggregated to one decimal revenue per orderkey BEFORE the join, so
-    the exchange moves |orders| rows instead of |lineitem| (4× fewer here,
-    ~arbitrarily fewer at web scale where orders average many lines), and
-    the join probe handles one row per key.  Decimal partial sums are
-    exact and associative, so sum-of-per-key-sums == the flat sum
-    bit-for-bit (oracle parity pinned; measured 0.89 → 0.64 s)."""
+    pre-aggregated to one decimal revenue per orderkey BEFORE the join.
+    The explicit ``repartition(n, "l_orderkey")`` still moves every
+    lineitem row (no map-side partial aggregate runs ahead of it); only
+    the join-side exchange shrinks, to |orders| pre-aggregated rows
+    instead of |lineitem| (4× fewer here), and the join probe handles one
+    row per key.  Decimal partial sums are exact and associative, so
+    sum-of-per-key-sums == the flat sum bit-for-bit (oracle parity pinned;
+    measured 0.89 → 0.64 s)."""
     n = spark.sparkContext.defaultParallelism
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey",

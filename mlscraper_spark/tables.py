@@ -78,6 +78,13 @@ class ParquetSnapshotFormat(TableFormat):
         # Spark job at all.  The arrow schema comes from the same
         # DDL→StructType→arrow mapping Spark's own Arrow path uses, so
         # reader schemas agree with seam-written non-empty deltas.
+        from urllib.parse import urlsplit
+
+        if urlsplit(path).scheme:
+            # file:, hdfs://, s3a://: not a path os/shutil can write, so
+            # commit through the base class's Spark write instead
+            return super().write_empty(spark, path, schema)
+
         import os
         import shutil
 

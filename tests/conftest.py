@@ -3,15 +3,31 @@ import os
 import pytest
 
 REFERENCE_STATIC = "/root/reference/tests/static"
+_MISSING = "reference fixture missing: "
 
 
 def reference_fixture(relpath: str) -> bytes:
     """Load a reference HTML fixture (test data, read at runtime)."""
     path = os.path.join(REFERENCE_STATIC, relpath)
     if not os.path.exists(path):
-        pytest.skip(f"reference fixture missing: {relpath}")
+        pytest.skip(f"{_MISSING}{relpath}")
     with open(path, "rb") as f:
         return f.read()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Reference goldens skip when their fixtures are absent; say so in one
+    line (how many, which files) so a skipped golden never reads as green."""
+    files = [
+        rep.longrepr[2].split(_MISSING, 1)[1]
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple) and _MISSING in rep.longrepr[2]
+    ]
+    if files:
+        terminalreporter.write_line(
+            f"{len(files)} reference goldens skipped, {REFERENCE_STATIC} "
+            f"absent: {', '.join(sorted(set(files)))}"
+        )
 
 
 # golden items, verbatim from /root/reference/tests/conftest.py:11-27

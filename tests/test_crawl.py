@@ -145,6 +145,38 @@ def test_engine_resume_equals_uninterrupted(spark, tmp_path, oracle_state):
     shutil.rmtree(root, ignore_errors=True)
 
 
+# Spark jobs one run_epoch submits from the driver thread on the small
+# crawl above: the actions the epoch needs plus the shuffle stages AQE
+# submits for them.  Measured 19 for epochs 0 and 1, at 2 and 4 cores.
+EPOCH_DRIVER_JOBS = 19
+
+
+def test_run_epoch_driver_job_count(spark, tmp_path):
+    """Pin the driver-thread Spark jobs per epoch.  An instrument or
+    refactor that adds an action (a count() to time a stage, say) changes
+    the plan it claims to observe; this fails instead of letting it skew
+    per-layer attribution silently.  The snapshot writer pool's threads
+    do not inherit the job group, so only driver-thread actions count."""
+    from mlscraper_spark.crawl.engine import run_epoch, seed_crawl
+
+    root = str(tmp_path / "crawl")
+    cfg = CrawlConfig(budget_per_host=BUDGET)
+    seed_crawl(spark, root, SEEDS, WEB, cfg)
+    sc = spark.sparkContext
+    jobs = []
+    for epoch in (0, 1):
+        group = f"run-epoch-job-count-{epoch}"
+        sc.setJobGroup(group, "run_epoch driver actions")
+        try:
+            assert run_epoch(spark, root, epoch, WEB, cfg) > 0
+        finally:
+            sc._jsc.clearJobGroup()
+        # the status tracker is fed by the listener bus, asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs == [EPOCH_DRIVER_JOBS] * 2
+
+
 def test_partial_snapshot_is_ignored(tmp_path):
     root = tmp_path / "partial"
     (root / "snap_00003").mkdir(parents=True)  # no manifest → incomplete
@@ -599,29 +631,62 @@ def test_delta_merge_single_exchange_no_join(spark):
 def test_write_empty_matches_job_write(spark, tmp_path):
     """The parquet write_empty fast path (r6: driver-side commit, no Spark
     job) must be indistinguishable to readers from a zero-row Spark write:
-    same read-back rows (none), same column set with and without a caller
-    schema, and the _SUCCESS commit marker present."""
+    same read-back rows (none), the same schema (names AND field types)
+    with and without a caller schema, and the _SUCCESS commit marker
+    present — for every schema the engine commits empty."""
     import os
+
+    from mlscraper_spark.crawl.engine import (
+        FETCHLOG_SCHEMA,
+        FILTERS_SCHEMA,
+        ROBOTS_SCHEMA,
+        SEEN_SCHEMA,
+    )
+    from mlscraper_spark.tables import ParquetSnapshotFormat
+
+    fmt = ParquetSnapshotFormat()
+    for i, schema in enumerate(
+        [SEEN_SCHEMA, FETCHLOG_SCHEMA, FILTERS_SCHEMA, ROBOTS_SCHEMA]
+    ):
+        fast = str(tmp_path / f"fast{i}")
+        job = str(tmp_path / f"job{i}")
+        fmt.write_empty(spark, fast, schema)
+        fmt.write(spark.createDataFrame([], schema), job)
+        assert fmt.is_complete(spark, fast) and fmt.is_complete(spark, job)
+        a = fmt.read(spark, [fast], schema)
+        b = fmt.read(spark, [job], schema)
+        assert a.schema == b.schema and a.count() == 0 == b.count()
+        # schema-less read must infer the same schema from the empty part
+        assert spark.read.parquet(fast).schema == spark.read.parquet(job).schema
+        # overwrite semantics: a second write_empty replaces the dir
+        fmt.write_empty(spark, fast, schema)
+        assert fmt.is_complete(spark, fast)
+        assert os.path.isfile(os.path.join(fast, "_SUCCESS"))
+
+
+def test_write_empty_on_uri_path(spark, tmp_path):
+    """A crawl root with a URI scheme is not a local path: write_empty
+    must still commit a complete zero-row table at that URI (through the
+    Spark write), with the caller's schema, not write somewhere else."""
+    import os
+
+    from pyspark.sql.types import _parse_datatype_string
 
     from mlscraper_spark.crawl.engine import FETCHLOG_SCHEMA
     from mlscraper_spark.tables import ParquetSnapshotFormat
 
     fmt = ParquetSnapshotFormat()
-    fast = str(tmp_path / "fast")
-    job = str(tmp_path / "job")
-    fmt.write_empty(spark, fast, FETCHLOG_SCHEMA)
-    fmt.write(spark.createDataFrame([], FETCHLOG_SCHEMA), job)
-    assert fmt.is_complete(spark, fast) and fmt.is_complete(spark, job)
-    a = fmt.read(spark, [fast], FETCHLOG_SCHEMA)
-    b = fmt.read(spark, [job], FETCHLOG_SCHEMA)
-    assert a.columns == b.columns and a.count() == 0 == b.count()
-    # schema-less read must infer the same columns from the empty part
-    inferred = spark.read.parquet(fast)
-    assert inferred.columns == b.columns
-    # overwrite semantics: a second write_empty replaces the dir
-    fmt.write_empty(spark, fast, FETCHLOG_SCHEMA)
-    assert fmt.is_complete(spark, fast)
-    assert os.path.isfile(os.path.join(fast, "_SUCCESS"))
+    local = tmp_path / "empty"
+    uri = local.as_uri()  # file:///...
+    assert uri.startswith("file:")
+    fmt.write_empty(spark, uri, FETCHLOG_SCHEMA)
+    assert os.path.isfile(os.path.join(local, "_SUCCESS"))
+    back = spark.read.parquet(uri)
+    assert back.count() == 0
+    assert back.schema == _parse_datatype_string(FETCHLOG_SCHEMA)
+    # overwrite semantics hold on the URI path too
+    fmt.write_empty(spark, uri, FETCHLOG_SCHEMA)
+    assert fmt.read(spark, [uri], FETCHLOG_SCHEMA).count() == 0
 
 
 def test_table_format_seam_contract(spark, tmp_path, oracle_state):
