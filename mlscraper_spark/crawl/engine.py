@@ -39,9 +39,15 @@ Design (SURVEY.md §7.4), round-2 architecture:
   associative and commutative, so any partitioning yields the oracle's
   result; applied only to dirty buckets.
 
-No per-row Python on the hot paths: hashing/bucketing/priority/ordering
-are JVM expressions; canonicalize + fetch + parse + politeness phase 1
-run in Arrow-batched UDFs with pandas-vectorized inner loops.
+* **One Python pass per fetched page**: the Arrow fetch stage fetches,
+  scans and canonicalizes links (one vectorized call per Arrow batch)
+  and, when the crawl carries a plan or emits images, parses the page
+  once for its payload.  The payload tables commit with the epoch's
+  snapshot, before its manifest.
+
+Hashing/bucketing/priority/ordering are JVM expressions; fetch + parse +
+canonicalize, seed canonicalization and politeness phase 1 run in
+Arrow-batched UDFs with pandas-vectorized inner loops.
 """
 from __future__ import annotations
 
@@ -242,155 +248,17 @@ def _collect_fingerprints(filters_df: DataFrame) -> dict:
     }
 
 
-# --- JVM canonicalization (F11 hot path) -----------------------------------
-# Crawl link volume is the engine's biggest column workload (every fetched
-# page emits links_per_page raw hrefs), and shipping them through Arrow to
-# pandas made canonicalization the largest Python stage in the epoch — a
-# poorly-scaling cost at wide parallelism (per-task Python overhead is
-# ~100x a JVM task's).  The hybrid below computes the canonical form
-# entirely in Catalyst expressions (whole-stage codegen) for every URL
-# shape whose canonicalization is expressible exactly, and routes ONLY the
-# residue through the Arrow UDF, masked to null for fast rows so the
-# python stage moves near-zero data.  Exactness argument, mirrored by
-# tests/test_urlnorm.py::test_jvm_canonicalize_matches_scalar:
-#
-# * fragment: ``canonicalize`` strips everything from the first '#'
-#   (urlsplit) — substring_index(url, '#', 1) is the same cut.
-# * gate (pre-query part): ^scheme://host(/path)?$ where host is
-#   [A-Za-z0-9.-]+ (no port/userinfo/IDN) and path excludes ?#, ASCII
-#   whitespace AND unicode whitespace — python's str.strip() trims
-#   unicode space, so a fast path that admitted e.g. U+00A0 at the end
-#   of a path would diverge; any such row falls to the residue UDF.
-# * query: parse_qsl→sorted→urlencode is the identity-then-sort exactly
-#   when every '&'-separated pair is k=v over urllib's always-safe set
-#   [A-Za-z0-9_.~-] (no '%', '+', ';', or a second '='): unquote/quote
-#   are identity there.  Sorting: python sorts (k, v) TUPLES; a plain
-#   string sort of "k=v" diverges when one key prefixes another ('='
-#   0x3D sorts above digits), so the pairs are sorted with '=' mapped to
-#   ',' (0x2C — below every gated char) and mapped back after the join:
-#   under that mapping bytewise string order IS tuple order.  Any other
-#   query falls to the residue UDF.
-# * scheme/host lowercase, empty path → '/': same expression both sides.
-#
-# PERFORMANCE CONTRACT: only codegen-friendly expressions — no
-# higher-order functions (transform/forall/array_sort-with-comparator
-# knock the whole projection out of whole-stage codegen into interpreted
-# eval; measured ~350 µs/row, 5x SLOWER than the Arrow/pandas stage this
-# replaces) and NO regex on the per-link hot path.  The r5 gate ran two
-# anchored Java regexes per link; at the 4M-links/epoch bench width those
-# regexes alone were ~8 s of a ~9 s gate stage (measured, r6).  The gate
-# below recognizes the SAME language with translate()-based charset tests
-# plus substring structure — each a single non-backtracking pass:
-#
-# * pre  ==  ^[A-Za-z][A-Za-z0-9+.-]*://[A-Za-z0-9.-]+(/[^?#WS]*)?\z
-#   decomposed at the FIRST '://' (the regex's split too: scheme/host
-#   charsets exclude ':' and '/'): scheme = alpha first char (ascii range
-#   check) + every char in _SCHEME_CHARS (translate deletes them all);
-#   host = nonempty prefix of hostpath up to the first '/', every char in
-#   _HOST_CHARS — so the remainder (the path) is '' or starts with '/',
-#   exactly the regex's optional group; path = no char of _PATH_BAD
-#   (?, #, and python-strippable whitespace: Java-\s + U+001C-1F + the
-#   unicode spaces — str.strip() trims these, so a fast path that kept
-#   them would diverge from the scalar canonicalizer).
-# * query ==  ^k=v(&k=v)*\z with k,v over [A-Za-z0-9_.~-], k nonempty:
-#   a char-class regexp_replace (linear scan, no backtracking — kept
-#   because translate cannot express "delete everything else") strips the
-#   k/v charset; what remains (the =/& skeleton plus any ILLEGAL char)
-#   must be exactly '=' alternating with '&' (starts/ends '=', no '==',
-#   no '&&', nothing outside {=,&}), and the two empty-key shapes the
-#   skeleton cannot see ('=v...' and '...&=v...') are guarded on q
-#   itself.  Proof of equality with the pair regex: the skeleton is the
-#   order-preserving projection of q onto its structural chars, so
-#   "alternating, ends both sides with '='" <=> every '&'-piece has
-#   exactly one '=', and the startswith/contains guards <=> every key is
-#   nonempty.
-#
-# Rows that fail the gate go to the python residue, which is exact — a
-# STRICTER gate can only cost speed, never correctness; equality with the
-# old regex gate (and the scalar canonicalizer) is pinned over the
-# adversarial corpus by tests/test_urlnorm.py.
-_ASCII_ALNUM = ("ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
-                "0123456789")
-_SCHEME_CHARS = _ASCII_ALNUM + "+.-"
-_HOST_CHARS = _ASCII_ALNUM + ".-"
-_PATH_BAD = (
-    "?# \t\n\x0b\f\r"                                  # '?', '#', Java \\s
-    + "".join(chr(c) for c in range(0x1C, 0x20))       # U+001C-U+001F
-    + "\x85\xa0\u1680"
-    + "".join(chr(c) for c in range(0x2000, 0x200B))   # U+2000-U+200A
-    + "\u2028\u2029\u202f\u205f\u3000"
-)
-
-
 def canonicalize_frame(df: DataFrame, raw_col: str) -> DataFrame:
-    """Append (url_canon, host, path) for ``raw_col``: JVM expressions for
-    the dominant shapes; the residue is FILTERED OUT and routed through the
-    Arrow UDF as its own (near-empty) branch of a union.  The r5 shape
-    instead masked the residue column to null and ran the UDF over EVERY
-    row — correct, but the whole link set still crossed the JVM↔python
-    boundary and back (guide §4.1: you control how many rows cross);
-    measured ~9 s/epoch of pure Arrow round-trip at the 4M-link width.
-    Row order across the union differs from the masked form; every
-    consumer is an aggregation/join/sorted-write, so results are
-    unchanged (the bit-for-bit crawl suite pins this)."""
-    s = F.trim(F.col(raw_col))  # ASCII-space trim; other edge whitespace
-    # fails the fast gate and lands in the residue (python strips it)
-    base = F.substring_index(s, "#", 1)
-    pre = F.substring_index(base, "?", 1)
-    qpos = F.locate("?", base)
-    q = F.when(qpos > 0, base.substr(qpos + F.lit(1), F.length(base)))
-
-    sp = F.locate("://", pre)  # first occurrence — a PATH may contain '://'
-    hostpath = pre.substr(sp + F.lit(3), F.length(pre))
-    host_raw = F.substring_index(hostpath, "/", 1)
-    host_f = F.lower(host_raw)
-    path_raw = hostpath.substr(
-        F.length(host_f) + F.lit(1), F.length(hostpath)
-    )
-    scheme_raw = pre.substr(F.lit(1), sp - F.lit(1))
-    scheme = F.lower(scheme_raw)
-    path_f = F.when(path_raw == "", "/").otherwise(path_raw)
-
-    first_c = F.ascii(scheme_raw)  # 0 for empty ⇒ fails both ranges
-    scheme_ok = (
-        (((first_c >= 65) & (first_c <= 90))
-         | ((first_c >= 97) & (first_c <= 122)))
-        & (F.length(F.translate(scheme_raw, _SCHEME_CHARS, "")) == 0)
-    )
-    host_ok = (F.length(host_raw) > 0) & (
-        F.length(F.translate(host_raw, _HOST_CHARS, "")) == 0
-    )
-    path_ok = (
-        F.length(F.translate(path_raw, _PATH_BAD, "")) == F.length(path_raw)
-    )
-    skel = F.regexp_replace(q, "[A-Za-z0-9_.~-]", "")
-    q_ok = (
-        (F.length(F.translate(skel, "=&", "")) == 0)
-        & skel.startswith("=") & skel.endswith("=")
-        & ~skel.contains("==") & ~skel.contains("&&")
-        & ~q.startswith("=") & ~q.contains("&=")
-    )
-    is_fast = ((sp > 0) & scheme_ok & host_ok & path_ok
-               & (q.isNull() | (q == "") | q_ok))
-    # sort_array, NOT array_sort: array_sort carries an implicit lambda
-    # comparator (a higher-order function), and ONE non-codegen expression
-    # drops this whole Project to interpreted eval — per-row boxed
-    # allocation that collapses wide-parallelism scaling (measured: the
-    # 16-core 4M leg ran 2-3x slower than with codegen restored, while the
-    # 4-core leg barely moved).  sort_array(asc) is the plain expression.
-    q_sorted = F.translate(
-        F.array_join(F.sort_array(F.split(F.translate(q, "=", ","), "&")), "&"),
-        ",", "=",
-    )
-    canon_f = F.concat(
-        scheme, F.lit("://"), host_f, path_f,
-        F.when(q.isNull() | (q == ""), "").otherwise(
-            F.concat(F.lit("?"), q_sorted)
-        ),
-    )
+    """Append (url_canon, host, path) for ``raw_col`` through
+    ``urlnorm.canonicalize_series`` in one Arrow UDF — the canonicalizer
+    the fetch stage applies to discovered links, here over seeds, so list
+    and DataFrame seeds and discoveries share one implementation.  A NULL
+    row yields NULL columns (``canonicalize_series`` alone would
+    stringify it to 'http://None'); an unparseable URL yields a NULL
+    url_canon, which callers drop."""
 
     @F.pandas_udf("struct<url_canon:string,host:string,path:string>")
-    def _residue(raw: pd.Series) -> pd.DataFrame:
+    def _canon(raw: pd.Series) -> pd.DataFrame:
         from mlscraper_spark.crawl.urlnorm import canonicalize_series
 
         out = pd.DataFrame(
@@ -404,24 +272,8 @@ def canonicalize_frame(df: DataFrame, raw_col: str) -> DataFrame:
             )
         return out
 
-    # A filter-split union (fast rows never entering python) and a
-    # cache-backed split were both TRIED here this round and rejected by
-    # measurement: any branch FILTER carrying the gate tree re-derives
-    # every shared piece per reference (FilterExec has no subexpression
-    # elimination — 6-8 s per filter pass at the 4M-link width), while
-    # this masked projection evaluates the gate once with CSE and ships
-    # only null-masked rows to python (~1.6 s total, vs ~18 s for the r5
-    # regex gate in the same shape).  The Arrow round trip of a
-    # null-masked column is validity bitmaps, not data — it was never the
-    # dominant term; the regex gate was.
-    slow = _residue(F.when(is_fast, F.lit(None)).otherwise(F.col(raw_col)))
-    return df.withColumns(
-        {
-            "url_canon": F.when(is_fast, canon_f).otherwise(slow["url_canon"]),
-            "host": F.when(is_fast, host_f).otherwise(slow["host"]),
-            "path": F.when(is_fast, path_f).otherwise(slow["path"]),
-        }
-    )
+    c = _canon(F.col(raw_col))
+    return df.withColumns({k: c[k] for k in ("url_canon", "host", "path")})
 
 
 def _write_frontier(fmt: TableFormat, df: DataFrame, snap: str,
@@ -464,14 +316,9 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
         raw = spark.createDataFrame(pd.DataFrame({"raw": seeds}),
                                     schema="raw string")
     # cache: the canonicalized seed set feeds BOTH the robots host scan and
-    # the frontier build — uncached, the canonicalize UDF pipeline re-runs
-    # for every consumer (measured 3× on the seed path).  The null filter
-    # sits ABOVE the cache on purpose: a filter below it would have the
-    # masked canonicalize projection inlined into its FilterExec condition
-    # (predicate pushdown substitutes the alias), and FilterExec performs
-    # no subexpression elimination — the whole gate tree re-evaluates per
-    # conjunct reference (measured ~9 s/epoch at 4M links, r6); above the
-    # cache it tests the STORED column.
+    # the frontier build — uncached, the canonicalize UDF re-runs for every
+    # consumer (measured 3× on the seed path).  The null filter sits above
+    # the cache so it tests the stored column instead of the UDF output.
     c_cached = canonicalize_frame(raw, "raw").select(
         "url_canon", "host", "path"
     ).cache()
@@ -583,12 +430,11 @@ def _filter_robots(df: DataFrame, robots: DataFrame,
     serial on the driver.  Otherwise a broadcast join against the resolved
     rules table; pure-function rules make the two identical because every
     table row was itself produced by the adapter."""
-    # Reuse the ``path`` column canonicalize_frame already computed when
-    # the caller kept it (pinned equal to urlsplit().path by
-    # tests/test_urlnorm.py): parse_url is a full java.net.URI parse per
-    # row, and re-deriving what the canonicalizer just produced was pure
-    # waste on the discovery hot path (guide §1.2: don't compute things
-    # twice).  The parse_url fallback remains for frames without it.
+    # Reuse the ``path`` column the canonicalizer already computed when
+    # the caller kept it (seeds and discoveries both carry it; pinned
+    # equal to urlsplit().path by tests/test_urlnorm.py): parse_url is a
+    # full java.net.URI parse per row.  The parse_url fallback remains
+    # for frames without it.
     # coalesce: parse_url yields NULL for URLs java.net.URI rejects; the
     # oracle's urlsplit returns '' there — NULL would nullify exists() and
     # silently drop the row, diverging from the oracle
@@ -805,11 +651,99 @@ def _assign_global_seq(spark: SparkSession, df: DataFrame) -> tuple[DataFrame, i
 # ---------------------------------------------------------------------------
 
 
-def _fetch_udf(web: WebConfig, fetch_adapter=None):
-    """Arrow fetch stage.  ``fetch_adapter`` (crawl/fetchers.FetchAdapter)
-    makes the transport injectable — the synthetic web by default, an
-    HttpFetchAdapter for real deployments — without touching the epoch
-    loop; the adapter is pickled into the python workers."""
+def _canonical_links(hrefs: list[list[str]]) -> list[list[tuple]]:
+    """Per-page ``(url_canon, host, path)`` links of one Arrow batch.
+
+    ONE ``canonicalize_series`` call over every page's hrefs flattened:
+    the call's pandas overhead is per call, so per-page calls cost ~770
+    µs/link at 10 links against ~29 µs at 2,048 and ~9.9 µs at 8k.
+    Unparseable hrefs are dropped (the oracle's rule); the fetch log's
+    ``n_links`` keeps the raw count."""
+    from mlscraper_spark.crawl.urlnorm import canonicalize_series
+
+    flat = [h for page in hrefs for h in page]
+    if not flat:
+        return [[] for _ in hrefs]
+    c = canonicalize_series(pd.Series(flat, dtype=object))
+    triples = list(zip(c["url_canon"], c["host"], c["path"]))
+    out, i = [], 0
+    for page in hrefs:
+        j = i + len(page)
+        out.append([t for t in triples[i:j] if isinstance(t[0], str)])
+        i = j
+    return out
+
+
+def _payload_fields(scraper_plan: dict | None,
+                    emit_images: bool) -> list[T.StructField]:
+    """Payload columns the fetch stage (and the resume backfill) emits."""
+    from mlscraper_spark.images.ops import IMAGES_SCHEMA
+
+    return (
+        ([T.StructField("value_json", T.StringType())] if scraper_plan else [])
+        + ([T.StructField("images", T.ArrayType(IMAGES_SCHEMA))]
+           if emit_images else [])
+    )
+
+
+def _page_payload(status: int, html: bytes, scraper_plan: dict | None,
+                  emit_images: bool) -> dict:
+    """The requested payload columns of one response, from ONE parse:
+    ``value_json`` is the plan's value (NULL when the page is not a 200 or
+    the plan raised, the JSON "null" when it extracted nothing — the
+    operators/extract.py convention) and ``images`` the page's
+    IMAGES_SCHEMA rows."""
+    if not (scraper_plan or emit_images):
+        return {}
+    from mlscraper_spark.crawl.synthweb import images_in
+    from mlscraper_spark.dom.css import PageDOM
+    from mlscraper_spark.dom.parser import parse_html
+    from mlscraper_spark.images.ops import image_rows
+    from mlscraper_spark.training.matches import PAGE_ROOT
+    from mlscraper_spark.training.scrapers import apply_plan
+
+    recs = parse_html(html) if status == 200 else None
+    out = {}
+    if scraper_plan:
+        out["value_json"] = None
+        if recs is not None:
+            try:
+                out["value_json"] = json.dumps(
+                    apply_plan(PageDOM(recs), PAGE_ROOT, scraper_plan,
+                               strict=False),
+                    sort_keys=True,
+                )
+            except Exception:
+                pass
+    if emit_images:
+        out["images"] = image_rows(images_in(recs)) if recs is not None else []
+    return out
+
+
+def _payload_tables(pages: DataFrame, scraper_plan: dict | None,
+                    emit_images: bool) -> list[tuple[DataFrame, str]]:
+    """``(frame, table)`` pairs of an epoch's payload from its 200 pages."""
+    tables = []
+    if scraper_plan:
+        tables.append((pages.select("url_canon", "value_json"), "extractions"))
+    if emit_images:
+        tables.append(
+            (pages.select(F.explode("images").alias("im")).select("im.*"),
+             "images")
+        )
+    return tables
+
+
+def _fetch_udf(web: WebConfig, fetch_adapter=None,
+               scraper_plan: dict | None = None, emit_images: bool = False):
+    """Arrow fetch stage — the one Python pass over each page: fetch,
+    link scan, link canonicalization (batched, see ``_canonical_links``)
+    and, when the crawl carries a plan or emits images, the page's
+    payload from a single parse (``_page_payload``).  ``fetch_adapter``
+    (crawl/fetchers.FetchAdapter) makes the transport injectable — the
+    synthetic web by default, an HttpFetchAdapter for real deployments —
+    without touching the epoch loop; the adapter is pickled into the
+    python workers."""
     out_schema = T.StructType(
         [
             T.StructField("url_canon", T.StringType()),
@@ -821,8 +755,12 @@ def _fetch_udf(web: WebConfig, fetch_adapter=None):
             T.StructField("n_links", T.IntegerType()),
             T.StructField("n_images", T.IntegerType()),
             T.StructField("page_fp", T.LongType()),
-            T.StructField("links", T.ArrayType(T.StringType())),
+            T.StructField("links", T.ArrayType(T.StructType(
+                [T.StructField(c, T.StringType())
+                 for c in ("url_canon", "host", "path")]
+            ))),
         ]
+        + _payload_fields(scraper_plan, emit_images)
     )
 
     def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -831,7 +769,7 @@ def _fetch_udf(web: WebConfig, fetch_adapter=None):
 
         adapter = fetch_adapter or SynthWebAdapter(web)
         for pdf in batches:
-            rows = []
+            rows, hrefs = [], []
             for url, host, hb, seq, depth in zip(
                 pdf["url_canon"], pdf["host"], pdf["host_bucket"], pdf["seq"],
                 pdf["depth"],
@@ -843,13 +781,17 @@ def _fetch_udf(web: WebConfig, fetch_adapter=None):
                 # mirrors) hashes identically, which is what crawl-time
                 # content dedup keys on; non-200 bodies carry no content
                 page_fp = content_fp(bytes(html)) if status == 200 else None
-                rows.append(
-                    (url, host, int(hb), int(seq), int(depth), status,
-                     len(links), n_images, page_fp, links)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields]
-            )
+                rows.append({
+                    "url_canon": url, "host": host, "host_bucket": int(hb),
+                    "seq": int(seq), "depth": int(depth), "status": status,
+                    "n_links": len(links), "n_images": n_images,
+                    "page_fp": page_fp,
+                    **_page_payload(status, html, scraper_plan, emit_images),
+                })
+                hrefs.append(links)
+            for row, links in zip(rows, _canonical_links(hrefs)):
+                row["links"] = links
+            yield pd.DataFrame(rows, columns=out_schema.fieldNames())
 
     return _fetch, out_schema
 
@@ -1092,8 +1034,12 @@ def read_robots(spark: SparkSession, root: str, upto_epoch: int) -> DataFrame:
 
 
 def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
-              cfg: CrawlConfig, fetch_adapter=None) -> int:
-    """Run one BSP epoch; returns number of URLs fetched."""
+              cfg: CrawlConfig, fetch_adapter=None,
+              scraper_plan: dict | None = None,
+              emit_images: bool = False) -> int:
+    """Run one BSP epoch; returns number of URLs fetched.  With a
+    ``scraper_plan`` / ``emit_images`` the epoch's snapshot also commits
+    its ``extractions`` / ``images`` tables (see ``run_crawl``)."""
     fmt = get_table_format(spark)
     prev = _snap_dir(root, epoch - 1)
     refs = _frontier_refs(root, epoch - 1)
@@ -1126,7 +1072,7 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
         return _run_epoch_body(
             spark, root, epoch, web, cfg, refs, robots, filters,
             url_seen, host_tokens, selected, n_selected, _caches, fmt,
-            fetch_adapter,
+            fetch_adapter, scraper_plan, emit_images,
         )
     finally:
         for df_ in _caches:
@@ -1135,9 +1081,11 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
 
 def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
                     url_seen, host_tokens, selected, n_selected, _caches,
-                    fmt, fetch_adapter=None):
-    # ---- fetch + parse (S4, Arrow-batched, spread by url_hash) ---------
-    fetch_fn, fetch_schema = _fetch_udf(web, fetch_adapter)
+                    fmt, fetch_adapter=None, scraper_plan=None,
+                    emit_images=False):
+    # ---- fetch + parse + canonicalize + payload (S4, one Arrow pass) ---
+    fetch_fn, fetch_schema = _fetch_udf(web, fetch_adapter, scraper_plan,
+                                        emit_images)
     # Task count is a function of DATA SIZE (one task per ~50k URLs — the
     # maxPartitionBytes analog: bounds worst-case fetch-result memory per
     # python worker and retry re-fetch granularity), floored at the core
@@ -1152,9 +1100,11 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
                   n_selected // 50_000 + 1)
     if cfg.fetch_partitions is not None:
         n_fetch = min(cfg.fetch_partitions, n_fetch)
-    # cache: the fetch output feeds the fetch log, the link discoveries and
-    # the metrics.  The dirty-bucket collect below materializes it inside
-    # its own job, so fetching costs no separate driver action.
+    # cache: the fetch output feeds the fetch log, the link discoveries,
+    # the metrics and the payload tables.  The dirty-bucket collect below
+    # materializes it inside its own job, so fetching costs no separate
+    # driver action.  With emit_images the cache holds the image bytes
+    # until the snapshot writes finish.
     fetched = (
         selected.select("url_canon", "url_hash", "host", "host_bucket", "seq", "depth")
         .repartition(n_fetch, "url_hash")
@@ -1169,27 +1119,16 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
         "status", "n_links", "n_images", "page_fp",
     )
 
-    # ---- discoveries: canonicalize, robots-filter, dedup (F11/J8) ------
-    raw_links = fetched.select(
-        (F.col("depth") + 1).alias("depth"), F.explode("links").alias("raw")
-    )
-    # The cache sits DIRECTLY on the canonicalize output and every filter
-    # sits above it: a filter below would have the masked canonicalize
-    # projection inlined into its FilterExec condition (pushdown
-    # substitutes the alias), and FilterExec does no subexpression
-    # elimination — the gate tree re-evaluates per conjunct reference
-    # (measured ~9 s/epoch at 4M links, r6).  Above the cache the filters
-    # test stored columns.  The cache is also why canonicalize runs once
-    # for its two consumers (robots_new host anti-join + the delta
-    # pipeline).  path rides along so the robots filter can test it
-    # directly instead of re-deriving it with a per-row parse_url.
-    disc0 = canonicalize_frame(raw_links, "raw").select(
-        "depth", "url_canon", "host", "path"
-    ).cache()
-    _caches.append(disc0)
+    # ---- discoveries: trap guard, robots-filter, dedup (J8) -------------
+    # links arrive canonicalized from the fetch stage, unparseable hrefs
+    # already dropped; path rides along so the robots filter tests it
+    # directly instead of re-deriving it with a per-row parse_url
     disc = _trap_filter(  # trap guard BEFORE robots: a trapped URL must
         # not trigger a robots fetch for its host
-        disc0.filter(F.col("url_canon").isNotNull()), cfg
+        fetched.select(
+            (F.col("depth") + 1).alias("depth"), F.explode("links").alias("l")
+        ).select("depth", "l.url_canon", "l.host", "l.path"),
+        cfg,
     )
     robots_new = _robots_rules_df(
         spark,
@@ -1290,6 +1229,10 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
         (filters_new, "filters"),
         (metrics, "metrics"),
     ]
+    # the payload commits with the snapshot: a kill before the manifest
+    # leaves an incomplete epoch, never one missing its payload
+    writes += _payload_tables(fetched.filter(F.col("status") == 200),
+                              scraper_plan, emit_images)
     # politeness token state — only when the bucket is non-degenerate
     # (cap == refill keeps this table nonexistent and costs nothing)
     cap, refill = _token_params(cfg)
@@ -1387,25 +1330,26 @@ def run_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     (tested): seeding canonicalizes + dedups, so source shape can't leak
     into snapshot content.
 
-    Optional per-epoch extraction stages (the north-star payload path —
-    fetch is a pure function of the URL, so these stages refetch rather
-    than persisting raw HTML in snapshots):
+    Optional per-epoch payload (the north-star path), computed inside the
+    fetch stage from the same response and parse as the links, and
+    committed with the epoch's snapshot:
 
     * ``scraper_plan``: apply a trained plan to every page fetched this
       epoch → ``extractions`` table (url_canon, value_json);
     * ``emit_images``: emit the input_hint images table
       (image_id, bytes, w, h, fmt, caption, phash) per epoch.
+
+    Raw HTML is never persisted.  A payload table missing from a complete
+    epoch (the crawl ran without the option, or the table was deleted) is
+    backfilled on resume by refetching through ``fetch_adapter``.
     """
     last = last_complete_epoch(root)
     if last is None:
         seed_crawl(spark, root, seeds, web, cfg, fetch_adapter)
         last = -1
     if scraper_plan or emit_images:
-        # backfill payload tables for already-complete epochs (a kill can
-        # land between the epoch manifest and its payload stages; fetch is
-        # a pure function, so re-deriving the payload is exact).  Commit
-        # detection goes through the TableFormat seam — an uncommitted
-        # (mid-kill) table must be redone whatever the storage format.
+        # Commit detection goes through the TableFormat seam — an
+        # uncommitted table must be redone whatever the storage format.
         fmt = get_table_format(spark)
         for e in range(0, last + 1):
             d = _snap_dir(root, e)
@@ -1418,33 +1362,46 @@ def run_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
             )
             if missing and fmt.exists(spark, os.path.join(d, "fetch_log")):
                 _run_payload_stages(spark, root, e, web, scraper_plan,
-                                    emit_images)
+                                    emit_images, fetch_adapter)
     for epoch in range(last + 1, max_epochs):
-        n = run_epoch(spark, root, epoch, web, cfg, fetch_adapter)
+        n = run_epoch(spark, root, epoch, web, cfg, fetch_adapter,
+                      scraper_plan, emit_images)
         if n == 0:
             break
-        if n and (scraper_plan or emit_images):
-            _run_payload_stages(spark, root, epoch, web, scraper_plan,
-                                emit_images)
 
 
 def _run_payload_stages(spark: SparkSession, root: str, epoch: int,
                         web: WebConfig, scraper_plan: dict | None,
-                        emit_images: bool) -> None:
+                        emit_images: bool, fetch_adapter=None) -> None:
+    """Resume backfill of one complete epoch's payload tables: refetch its
+    200 pages through the adapter and derive the payload with the fetch
+    stage's own per-page helper (fetch is a pure function of the URL under
+    the synthetic web, so the result equals the epoch's own)."""
     fmt = get_table_format(spark)
     d = _snap_dir(root, epoch)
     urls = fmt.read(spark, [os.path.join(d, "fetch_log")], FETCHLOG_SCHEMA).filter(
         F.col("status") == 200
     ).select("url_canon")
-    if scraper_plan:
-        from mlscraper_spark.operators.extract import extract_from_urls
+    schema = T.StructType([T.StructField("url_canon", T.StringType())]
+                          + _payload_fields(scraper_plan, emit_images))
 
-        fmt.write(extract_from_urls(urls, scraper_plan, web),
-                  os.path.join(d, "extractions"))
-    if emit_images:
-        from mlscraper_spark.images.ops import fetch_and_extract_images
+    def _refetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        adapter = fetch_adapter or SynthWebAdapter(web)
+        for pdf in batches:
+            rows = []
+            for url in pdf["url_canon"]:
+                status, html = adapter.fetch(url)
+                rows.append({"url_canon": url, **_page_payload(
+                    status, html, scraper_plan, emit_images)})
+            yield pd.DataFrame(rows, columns=schema.fieldNames())
 
-        fmt.write(fetch_and_extract_images(urls, web), os.path.join(d, "images"))
+    # cache: both payload tables read the one refetch
+    pages = urls.mapInPandas(_refetch, schema).cache()
+    try:
+        for df, name in _payload_tables(pages, scraper_plan, emit_images):
+            fmt.write(df, os.path.join(d, name))
+    finally:
+        pages.unpersist()
 
 
 EXTRACTIONS_SCHEMA = "url_canon string, value_json string"

@@ -281,6 +281,12 @@ def extract_images(html: bytes) -> list[dict]:
     """Document-order (src, caption, w, h) from <img> tags."""
     from mlscraper_spark.dom.parser import parse_html
 
+    return images_in(parse_html(html))
+
+
+def images_in(recs) -> list[dict]:
+    """``extract_images`` over already-parsed node records, so one parse
+    of a page serves both its plan and its images."""
     return [
         {
             "src": r.attrs.get("src", ""),
@@ -288,6 +294,6 @@ def extract_images(html: bytes) -> list[dict]:
             "w": _dim(r.attrs.get("width", 0)),
             "h": _dim(r.attrs.get("height", 0)),
         }
-        for r in parse_html(html)
+        for r in recs
         if r.tag == "img"
     ]

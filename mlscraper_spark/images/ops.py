@@ -71,6 +71,24 @@ def extract_images_table(pages_df: DataFrame, page_id_col: str = "url_canon",
     return pages_df.select(page_id_col, html_col).mapInPandas(_run, IMAGES_SCHEMA)
 
 
+def image_rows(images: list[dict]) -> list[tuple]:
+    """IMAGES_SCHEMA rows for one page's ``<img>`` dicts
+    (``synthweb.images_in``): pixels from the synthetic store, the default
+    format policy, phash of the decoded pixels.  Shared by
+    ``fetch_and_extract_images`` and the crawl's fetch stage."""
+    from mlscraper_spark.images.codec import decode, encode, make_image, phash
+
+    rows = []
+    for im in images:
+        image_id = im["src"]
+        w, h = im["w"], im["h"]
+        fmt = default_fmt_policy(image_id, w, h)
+        blob = encode(make_image(image_id, w, h), fmt)
+        rows.append((image_id, blob, w, h, fmt, im["caption"],
+                     phash(decode(blob, fmt))))
+    return rows
+
+
 def fetch_and_extract_images(urls_df: DataFrame, web, url_col: str = "url_canon") -> DataFrame:
     """Fused fetch → parse → images stage: one Arrow UDF, so raw HTML never
     crosses the JVM↔Python boundary and each task runs exactly one Python
@@ -79,23 +97,13 @@ def fetch_and_extract_images(urls_df: DataFrame, web, url_col: str = "url_canon"
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from mlscraper_spark.crawl.synthweb import extract_images, fetch
-        from mlscraper_spark.crawl.urlnorm import xxhash64
-        from mlscraper_spark.images.codec import decode, encode, make_image, phash
 
         for pdf in batches:
             rows = []
             for url in pdf[url_col]:
                 status, html = fetch(url, web)
-                if status != 200:
-                    continue
-                for im in extract_images(html):
-                    image_id = im["src"]
-                    w, h = im["w"], im["h"]
-                    fmt = "ppm" if xxhash64(image_id.encode()) % 2 == 0 else "dctq"
-                    img = make_image(image_id, w, h)
-                    blob = encode(img, fmt)
-                    ph = phash(decode(blob, fmt))
-                    rows.append((image_id, blob, w, h, fmt, im["caption"], ph))
+                if status == 200:
+                    rows += image_rows(extract_images(html))
             yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
 
     return urls_df.select(url_col).mapInPandas(_run, IMAGES_SCHEMA)

@@ -51,47 +51,6 @@ def extract_with_plan(pages_df: DataFrame, plan: dict,
     return pages_df.select(page_id_col, html_col).mapInPandas(_extract, schema)
 
 
-def extract_from_urls(urls_df: DataFrame, plan: dict, web,
-                      url_col: str = "url_canon") -> DataFrame:
-    """North-star hot path: fetched pages flow through one Arrow UDF that
-    applies a trained scraper plan — fetch + parse + extract fused, so HTML
-    never crosses the JVM↔Python boundary (same shape as
-    images/ops.fetch_and_extract_images)."""
-    plan_json = json.dumps(plan)
-    schema = T.StructType(
-        [
-            T.StructField("url_canon", T.StringType(), False),
-            T.StructField("value_json", T.StringType(), True),
-        ]
-    )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mlscraper_spark.crawl.synthweb import fetch
-        from mlscraper_spark.training.scrapers import apply_plan_to_html
-
-        p = json.loads(plan_json)
-        for pdf in batches:
-            out = []
-            for url in pdf[url_col]:
-                # same NULL-vs-"null" convention as extract_with_plan:
-                # NULL = fetch/plan failure, "null" = extracted nothing
-                status, html = fetch(url, web)
-                if status != 200:
-                    out.append((url, None))
-                    continue
-                try:
-                    out.append(
-                        (url,
-                         json.dumps(apply_plan_to_html(html, p, strict=False),
-                                    sort_keys=True))
-                    )
-                except Exception:
-                    out.append((url, None))
-            yield pd.DataFrame(out, columns=["url_canon", "value_json"])
-
-    return urls_df.select(url_col).mapInPandas(_run, schema)
-
-
 def extract_list_items(pages_df: DataFrame, plan: dict,
                        page_id_col: str = "page_id",
                        html_col: str = "html") -> DataFrame:

@@ -216,17 +216,20 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 
 _OVERRIDE: TableFormat | None = None
+# probe result per SparkContext applicationId (unique per context, unlike
+# id() of a session object, which GC can reuse): a failing probe costs
+# ~23 ms, dominated by Py4J's exception conversion, and a crawl asks for
+# the format about a dozen times
+_ICEBERG: dict[str, bool] = {}
 
 
 def get_table_format(spark: SparkSession) -> TableFormat:
-    # probed per call: the Class.forName round-trip costs ~1 ms and a
-    # cache keyed by session identity can go stale (id() reuse after GC)
     if _OVERRIDE is not None:
         return _OVERRIDE
-    return (
-        IcebergSnapshotFormat() if iceberg_available(spark)
-        else ParquetSnapshotFormat()
-    )
+    app = spark.sparkContext.applicationId
+    if app not in _ICEBERG:
+        _ICEBERG[app] = iceberg_available(spark)
+    return IcebergSnapshotFormat() if _ICEBERG[app] else ParquetSnapshotFormat()
 
 
 class use_table_format:

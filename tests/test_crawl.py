@@ -147,8 +147,10 @@ def test_engine_resume_equals_uninterrupted(spark, tmp_path, oracle_state):
 
 # Spark jobs one run_epoch submits from the driver thread on the small
 # crawl above: the actions the epoch needs plus the shuffle stages AQE
-# submits for them.  Measured 19 for epochs 0 and 1, at 2 and 4 cores.
-EPOCH_DRIVER_JOBS = 19
+# submits for them.  Measured 18 for epochs 0 and 1, at 2 and 4 cores:
+# links are canonicalized inside the fetch stage, so the separate
+# canonicalize stage's job is gone (19 before).
+EPOCH_DRIVER_JOBS = 18
 
 
 def test_run_epoch_driver_job_count(spark, tmp_path):
@@ -746,6 +748,29 @@ def test_table_format_seam_contract(spark, tmp_path, oracle_state):
             stray.append(os.path.join(base, f))
     assert on_disk_tables == {p for p in written if os.path.isdir(p)}
     assert all(os.path.basename(p) == "_manifest.json" for p in stray), stray
+
+
+def test_table_format_probe_memoized(spark, monkeypatch):
+    """The classpath probe runs once per SparkContext, not per call, and
+    an injected format still takes precedence without probing."""
+    from mlscraper_spark import tables
+
+    calls = []
+    real = tables.iceberg_available
+
+    def counting(spark_):
+        calls.append(1)
+        return real(spark_)
+
+    monkeypatch.setattr(tables, "iceberg_available", counting)
+    monkeypatch.setattr(tables, "_ICEBERG", {})
+    fmts = [tables.get_table_format(spark) for _ in range(5)]
+    assert len(calls) == 1
+    assert {type(f) for f in fmts} == {type(fmts[0])}
+    fake = tables.ParquetSnapshotFormat()
+    with tables.use_table_format(fake):
+        assert tables.get_table_format(spark) is fake
+    assert len(calls) == 1
 
 
 def test_streaming_sources_honor_table_format_seam(spark, tmp_path):

@@ -96,8 +96,8 @@ def test_canonicalize_series_equals_rowwise(urls):
 
 def _adversarial_url_corpus() -> list:
     """Cross-product of adversarial URL parts: every shape the hypothesis
-    generator above draws from, plus the query/whitespace edges that gate
-    the JVM fast path (percent-escapes, '+', ';', double '=', empty pairs,
+    generator above draws from, plus the query/whitespace edges a
+    canonicalizer fast path most easily gets wrong (percent-escapes, '+', ';', double '=', empty pairs,
     unicode whitespace at path edges, ports, userinfo, IDN)."""
     schemes = ["http", "HTTP", "https", "a+b-c.d"]
     hosts = ["h.test", "HOST7.TEST", "h-x.y.z", "h.test.",
@@ -141,11 +141,11 @@ def _adversarial_url_corpus() -> list:
     return out
 
 
-def test_jvm_canonicalize_matches_pandas_reference(spark):
-    """canonicalize_frame (the JVM-expression hot path + masked residue
-    UDF) must equal canonicalize_series — the property-pinned reference —
-    on every adversarial shape, including rows the canonicalizer rejects
-    (None through both paths)."""
+def test_canonicalize_frame_matches_pandas_reference(spark):
+    """canonicalize_frame (the seed path's Arrow UDF, with its NULL mask)
+    must equal canonicalize_series — the property-pinned reference — on
+    every adversarial shape, including rows the canonicalizer rejects
+    (None through both paths), and a NULL row must give NULL columns."""
     import pandas as pd
 
     from mlscraper_spark.crawl.engine import canonicalize_frame
