@@ -11,6 +11,8 @@ Design (SURVEY.md §7.4), round-2 architecture:
   seam (``mlscraper_spark/tables.py``: Iceberg when the runtime jar is
   present, parquet dirs + JSON manifest otherwise).  Each epoch reads only
   the previous snapshot, so kill-and-resume is free and exact (tested).
+  The seed, every epoch and the final empty epoch commit through one
+  function, ``_commit_snapshot``: all tables first, the manifest last.
 * **Frontier is a bucket-manifested table**: rows are bucketed by
   ``host_bucket``; the epoch manifest maps each bucket to the snapshot
   that last rewrote it (``frontier_refs``).  An epoch rewrites ONLY the
@@ -54,6 +56,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -65,7 +68,7 @@ from pyspark.sql import types as T
 
 from mlscraper_spark.crawl.fetchers import SynthWebAdapter
 from mlscraper_spark.crawl.synthweb import WebConfig
-from mlscraper_spark.tables import TableFormat, get_table_format
+from mlscraper_spark.tables import get_table_format
 
 FRONTIER_SCHEMA = (
     "url_canon string, url_hash long, host string, host_bucket int, "
@@ -99,14 +102,6 @@ class CrawlConfig:
     # but loses the fast path, so at 10^10 URLs / 4096 buckets you'd run
     # 1 << 20 (8 MiB/bucket).  Changing this across a resume is rejected
     # (the blob header carries its geometry).
-    fetch_partitions: int | None = None  # optional HARD CAP on fetch-stage
-    # task count; None (default) sizes by cores and width — 4 waves/core,
-    # ≤~50k URLs/task.  A fixed cap like the old default of 128 silently
-    # throttles a 1000-executor cluster (parallelism×4 ≫ 128), so a cap
-    # is only for callers that must bound task count (e.g. rate-limited
-    # egress).  Independent of n_buckets: politeness is enforced before
-    # the fetch, so any even partitioning is sound; url_hash keying
-    # spreads heavy hosts.
     max_ref_span: int = 8  # frontier refs may span at most this many
     # snapshots before a full compaction rewrite (bounds manifest-chain
     # length and lets old snapshots expire — Iceberg snapshot-expiry
@@ -241,13 +236,6 @@ _IDENTITY_COLS = (
 )
 
 
-def _collect_fingerprints(filters_df: DataFrame) -> dict:
-    return {
-        str(r.host_bucket): r.fingerprint
-        for r in filters_df.select("host_bucket", "fingerprint").collect()
-    }
-
-
 def canonicalize_frame(df: DataFrame, raw_col: str) -> DataFrame:
     """Append (url_canon, host, path) for ``raw_col`` through
     ``urlnorm.canonicalize_series`` in one Arrow UDF — the canonicalizer
@@ -276,18 +264,64 @@ def canonicalize_frame(df: DataFrame, raw_col: str) -> DataFrame:
     return df.withColumns({k: c[k] for k in ("url_canon", "host", "path")})
 
 
-def _write_frontier(fmt: TableFormat, df: DataFrame, snap: str,
-                    n_buckets: int) -> None:
+def _frontier_layout(df: DataFrame, n_buckets: int) -> DataFrame:
     """Frontier files are repartitioned by host_bucket (one bucket never
     spans tasks → tight file stats for bucket-pruned reads) and sorted by
     the politeness order within partitions so phase-1 top-k scans
     pre-sorted runs."""
-    fmt.write(
-        df.repartition(n_buckets, "host_bucket").sortWithinPartitions(
-            "host", F.desc("priority"), F.asc("url_hash"), F.asc("url_canon")
-        ),
-        os.path.join(snap, "frontier"),
+    return df.repartition(n_buckets, "host_bucket").sortWithinPartitions(
+        "host", F.desc("priority"), F.asc("url_hash"), F.asc("url_canon")
     )
+
+
+def _commit_snapshot(spark: SparkSession, root: str, epoch: int,
+                     tables: dict, manifest: dict) -> None:
+    """Commit the snapshot after ``epoch`` — the one commit path of the
+    seed, every epoch and the final empty epoch.
+
+    ``tables`` maps a table name to a DataFrame, written as concurrent
+    Spark jobs (one writer thread each), or to a schema string, a
+    zero-row table committed through the seam's ``write_empty`` (the
+    parquet variant does it driver-side: no Spark job, where a zero-row
+    job costs ~0.5 s of pure scheduling).  ``_manifest.json`` — ``epoch``
+    plus ``manifest`` — is written last, only after every table commit
+    succeeded: it is the atomic completion marker, so a failure or a kill
+    anywhere before it leaves an incomplete snapshot that resume redoes."""
+    fmt = get_table_format(spark)
+    d = _snap_dir(root, epoch)
+    frames = {n: t for n, t in tables.items() if isinstance(t, DataFrame)}
+    with ThreadPoolExecutor(max_workers=max(1, len(frames))) as pool:
+        futs = [pool.submit(fmt.write, df, os.path.join(d, name))
+                for name, df in frames.items()]
+        for name, schema in tables.items():
+            if name not in frames:
+                fmt.write_empty(spark, os.path.join(d, name), schema)
+        for fut in futs:
+            fut.result()  # propagate failures before the manifest exists
+    with open(_manifest_path(root, epoch), "w") as f:
+        json.dump({"epoch": epoch, **manifest}, f)
+
+
+def _admit(spark: SparkSession, df: DataFrame, robots: DataFrame | None,
+           robots_epoch: int, cfg: CrawlConfig,
+           adapter) -> tuple[DataFrame, DataFrame]:
+    """Admission of candidate (depth, url_canon, host, path) rows — seeds
+    and every discovery delta — in the oracle's order: the trap guard
+    first (a trapped URL must not trigger a robots fetch for its host),
+    then robots rules resolved for the hosts not already in ``robots``
+    (None: none resolved yet) and recorded as fetched at
+    ``robots_epoch``, then the robots filter, then ``host_bucket`` and
+    ``url_hash``.  Returns ``(admitted, robots_new)``; ``robots_new`` is
+    cached — it feeds the filter and the snapshot's ``robots_delta`` —
+    and the caller unpersists it."""
+    df = _trap_filter(df, cfg)
+    hosts = df.select("host")
+    if robots is not None:
+        hosts = hosts.join(robots.select("host"), "host", "left_anti")
+    robots_new = _robots_rules_df(spark, hosts, robots_epoch, adapter).cache()
+    known = robots_new if robots is None else robots.unionByName(robots_new)
+    admitted = _with_host_bucket(_filter_robots(df, known, adapter), cfg)
+    return admitted.withColumn("url_hash", F.xxhash64("url_canon")), robots_new
 
 
 def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
@@ -300,17 +334,16 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     interactive use) or a single-string-column ``DataFrame`` (the scale
     path: a 100 TB deployment's seed list lives in storage or is generated
     distributedly, never materialized on the driver.  A driver list is
-    embedded into every task binary — ~8 MB at 1.2M seeds, a
-    cores-independent cost the N-vs-4N ladder measures directly)."""
+    embedded into every task binary — ~8 MB at 1.2M seeds, a driver cost
+    that does not shrink with more cores)."""
     adapter = fetch_adapter or SynthWebAdapter(web)
-    fmt = get_table_format(spark)
     if isinstance(seeds, DataFrame):
         raw = seeds.select(F.col(seeds.columns[0]).cast("string").alias("raw"))
     else:
         # Arrow path (one pandas column), not createDataFrame(list-of-tuples):
-        # row-by-row conversion serializes the whole seed list on the DRIVER —
-        # a cores-independent cost that at ladder widths (300k-1.2M seeds)
-        # dominates the seed snapshot and drags the N-vs-4N efficiency ratio
+        # row-by-row conversion serializes the whole seed list on the DRIVER,
+        # a cost that does not shrink with more cores and at 300k-1.2M seeds
+        # dominates the seed snapshot.
         # explicit schema: an empty seed list otherwise breaks inference
         # (pandas object column with no rows → "can not infer schema")
         raw = spark.createDataFrame(pd.DataFrame({"raw": seeds}),
@@ -327,22 +360,18 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
         # unparseable seed is dropped (oracle does the same), never a
         # phantom null-host frontier row
     )
+    admitted, robots = _admit(spark, c.withColumn("depth", F.lit(0)), None,
+                              0, cfg, adapter)
     frontier = (
-        _with_host_bucket(c, cfg)
-        .withColumn("url_hash", F.xxhash64("url_canon"))
-        .withColumn("depth", F.lit(0))
-        .withColumn("discovered_epoch", F.lit(0))
+        admitted.withColumn("discovered_epoch", F.lit(0))
         .withColumn("priority", _priority_col())
+        .select(
+            "url_canon", "url_hash", "host", "host_bucket",
+            "priority", "depth", "discovered_epoch",
+        )
+        .dropDuplicates(["url_canon"])
+        .cache()
     )
-    frontier = _trap_filter(frontier, cfg)  # before robots: a trapped
-    # seed must not trigger a robots fetch for its host (oracle order)
-    # cache: robots is broadcast into the frontier filter AND written below
-    robots = _robots_rules_df(spark, frontier.select("host").distinct(), 0,
-                              adapter).cache()
-    frontier = _filter_robots(frontier, robots, adapter).select(
-        "url_canon", "url_hash", "host", "host_bucket",
-        "priority", "depth", "discovered_epoch",
-    ).dropDuplicates(["url_canon"]).cache()
     bucket_rows = frontier.groupBy("host_bucket").count().collect()
     buckets = sorted(r.host_bucket for r in bucket_rows)
     # manifest count = the seeded FRONTIER (canonicalized, deduped,
@@ -351,36 +380,19 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     # raw pre-filter list length for the list path, as earlier rounds did,
     # made the same crawl seeded two ways write different manifests.)
     n_seeds = sum(r["count"] for r in bucket_rows)
-
-    d = _snap_dir(root, -1)
-    # independent tables written concurrently, same pattern as the epoch
-    # snapshot (the manifest below is the atomic completion marker)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(_write_frontier, fmt, frontier, d, cfg.n_buckets),
-            pool.submit(fmt.write, robots, os.path.join(d, "robots_delta")),
-        ]
-        # zero-row tables commit through the seam's write_empty — the
-        # parquet variant does it driver-side (no Spark job; a zero-row
-        # job costs ~0.5 s each of pure scheduling, measured r6)
-        fmt.write_empty(spark, os.path.join(d, "url_seen_delta"), SEEN_SCHEMA)
-        fmt.write_empty(spark, os.path.join(d, "filters"), FILTERS_SCHEMA)
-        for fut in futs:
-            fut.result()
+    _commit_snapshot(
+        spark, root, -1,
+        {
+            "frontier": _frontier_layout(frontier, cfg.n_buckets),
+            "robots_delta": robots,
+            "url_seen_delta": SEEN_SCHEMA,
+            "filters": FILTERS_SCHEMA,
+        },
+        {"seeds": n_seeds, "frontier_refs": {str(b): -1 for b in buckets}},
+    )
     frontier.unpersist()
     c_cached.unpersist()
     robots.unpersist()
-    with open(_manifest_path(root, -1), "w") as f:
-        json.dump(
-            {
-                "epoch": -1,
-                "seeds": n_seeds,
-                "frontier_refs": {str(b): -1 for b in buckets},
-            },
-            f,
-        )
 
 
 def _robots_rules_df(spark: SparkSession, hosts_df: DataFrame, epoch: int,
@@ -430,20 +442,11 @@ def _filter_robots(df: DataFrame, robots: DataFrame,
     serial on the driver.  Otherwise a broadcast join against the resolved
     rules table; pure-function rules make the two identical because every
     table row was itself produced by the adapter."""
-    # Reuse the ``path`` column the canonicalizer already computed when
-    # the caller kept it (seeds and discoveries both carry it; pinned
-    # equal to urlsplit().path by tests/test_urlnorm.py): parse_url is a
-    # full java.net.URI parse per row.  The parse_url fallback remains
-    # for frames without it.
-    # coalesce: parse_url yields NULL for URLs java.net.URI rejects; the
-    # oracle's urlsplit returns '' there — NULL would nullify exists() and
-    # silently drop the row, diverging from the oracle
-    if "path" in df.columns:
-        path_expr = F.coalesce(F.col("path"), F.lit(""))
-    else:
-        path_expr = F.coalesce(
-            F.parse_url(F.col("url_canon"), F.lit("PATH")), F.lit("")
-        )
+    # ``df`` carries the ``path`` column the canonicalizer computed (seeds
+    # and discoveries both keep it; pinned equal to urlsplit().path by
+    # tests/test_urlnorm.py).  coalesce: a NULL path would nullify the
+    # rule match and silently drop the row, where the oracle tests ''
+    path_expr = F.coalesce(F.col("path"), F.lit(""))
     blocked_col = (
         getattr(adapter, "robots_blocked_col", lambda h, p: None)(
             F.col("host"), path_expr
@@ -556,7 +559,7 @@ def _politeness_select(frontier: DataFrame, cfg: CrawlConfig,
     top-k over that small union, joined with the (small) host-token state
     — yields exactly the oracle's selection.  The frontier itself is never
     exchanged; when stored buckets keep hosts partition-local (the layout
-    ``_write_frontier`` produces), phase 1 already emits the exact answer
+    ``_frontier_layout`` produces), phase 1 already emits the exact answer
     and phase 2's shuffle moves only ~capacity×hosts rows."""
     cap, refill = _token_params(cfg)
     budget = cap
@@ -608,9 +611,8 @@ def _assign_global_seq(spark: SparkSession, df: DataFrame) -> tuple[DataFrame, i
 
     Returns ``(df_with_seq, n_rows)`` — the total falls out of the offsets
     collect for free, so callers need no separate count() action (each
-    driver action costs ~0.5 s of plan+submit regardless of cluster size;
-    the epoch loop's actions are a measured serial term in the N-vs-4N
-    scaling ladder)."""
+    driver action costs ~0.5 s of plan+submit regardless of cluster size,
+    a serial term of every epoch that more cores do not shrink)."""
     # K is a CONSTANT, not cores×2: seq is total-order-invariant under any
     # K (tested), so tying it to defaultParallelism only made the plan —
     # and the window's task sizes — differ between cluster widths for no
@@ -721,16 +723,15 @@ def _page_payload(status: int, html: bytes, scraper_plan: dict | None,
 
 
 def _payload_tables(pages: DataFrame, scraper_plan: dict | None,
-                    emit_images: bool) -> list[tuple[DataFrame, str]]:
-    """``(frame, table)`` pairs of an epoch's payload from its 200 pages."""
-    tables = []
+                    emit_images: bool) -> dict[str, DataFrame]:
+    """Table name → frame of an epoch's payload from its 200 pages."""
+    tables = {}
     if scraper_plan:
-        tables.append((pages.select("url_canon", "value_json"), "extractions"))
+        tables["extractions"] = pages.select("url_canon", "value_json")
     if emit_images:
-        tables.append(
-            (pages.select(F.explode("images").alias("im")).select("im.*"),
-             "images")
-        )
+        tables["images"] = pages.select(
+            F.explode("images").alias("im")
+        ).select("im.*")
     return tables
 
 
@@ -1033,6 +1034,30 @@ def read_robots(spark: SparkSession, root: str, upto_epoch: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _read_filters(spark: SparkSession, root: str, epoch: int) -> DataFrame:
+    return get_table_format(spark).read(
+        spark, [os.path.join(_snap_dir(root, epoch), "filters")], FILTERS_SCHEMA
+    )
+
+
+def _host_tokens_table(spark: SparkSession, host_tokens: DataFrame,
+                       selected: DataFrame | None, cfg: CrawlConfig) -> dict:
+    """The snapshot's politeness token state after consuming ``selected``
+    (None: an empty epoch, where the refill still ticks — tokens accrue
+    with time).  Written only when the bucket is non-degenerate: cap ==
+    refill keeps the table nonexistent and costs nothing."""
+    cap, refill = _token_params(cfg)
+    if cap == refill:
+        return {}
+    if selected is None:
+        sel_counts = spark.createDataFrame([], "host string, n_sel long")
+    else:
+        sel_counts = selected.groupBy("host").agg(
+            F.count(F.lit(1)).alias("n_sel")
+        )
+    return {"host_tokens": _next_host_tokens(host_tokens, sel_counts, cfg)}
+
+
 def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
               cfg: CrawlConfig, fetch_adapter=None,
               scraper_plan: dict | None = None,
@@ -1040,13 +1065,8 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
     """Run one BSP epoch; returns number of URLs fetched.  With a
     ``scraper_plan`` / ``emit_images`` the epoch's snapshot also commits
     its ``extractions`` / ``images`` tables (see ``run_crawl``)."""
-    fmt = get_table_format(spark)
-    prev = _snap_dir(root, epoch - 1)
     refs = _frontier_refs(root, epoch - 1)
     frontier = read_frontier(spark, root, epoch - 1)
-    robots = read_robots(spark, root, epoch - 1)
-    filters = fmt.read(spark, [os.path.join(prev, "filters")], FILTERS_SCHEMA)
-    url_seen = read_url_seen(spark, root, epoch - 1)
     host_tokens = read_host_tokens(spark, root, epoch - 1)
 
     # ---- politeness top-k (T6) + global fetch order --------------------
@@ -1058,31 +1078,49 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
     # count() action; the selected cache materializes inside the fetch job
     selected, n_selected = _assign_global_seq(spark, pol)
     selected = selected.cache()
-    if n_selected == 0:
-        selected.unpersist()
-        pol.unpersist()
-        _write_empty_epoch(spark, root, epoch, refs, robots, filters,
-                           host_tokens, cfg, fmt)
-        return 0
-
     # caches created below are released in the finally block even when a
     # stage throws (long sessions run many crawls)
     _caches = [selected, pol]
     try:
-        return _run_epoch_body(
-            spark, root, epoch, web, cfg, refs, robots, filters,
-            url_seen, host_tokens, selected, n_selected, _caches, fmt,
-            fetch_adapter, scraper_plan, emit_images,
+        if n_selected > 0:
+            return _run_epoch_body(
+                spark, root, epoch, web, cfg, refs, host_tokens, selected,
+                n_selected, _caches, fetch_adapter, scraper_plan, emit_images,
+            )
+        # nothing selected — the final snapshot of every completed crawl:
+        # every frontier bucket carries forward by reference, the deltas
+        # are empty and the filters table is rewritten unchanged, so the
+        # previous manifest's lineage (fingerprints, base epochs) is exact
+        prev = _read_manifest(root, epoch - 1)
+        _commit_snapshot(
+            spark, root, epoch,
+            {
+                "url_seen_delta": SEEN_SCHEMA,
+                "fetch_log": FETCHLOG_SCHEMA,
+                "robots_delta": ROBOTS_SCHEMA,
+                "filters": _read_filters(spark, root, epoch - 1),
+                **_host_tokens_table(spark, host_tokens, None, cfg),
+            },
+            {
+                "n_fetched": 0,
+                "filter_fingerprints": prev.get("filter_fingerprints", {}),
+                "frontier_refs": prev["frontier_refs"],
+                "seen_base_epoch": prev.get("seen_base_epoch"),
+                "robots_base_epoch": prev.get("robots_base_epoch"),
+            },
         )
+        return 0
     finally:
         for df_ in _caches:
             df_.unpersist()
 
 
-def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
-                    url_seen, host_tokens, selected, n_selected, _caches,
-                    fmt, fetch_adapter=None, scraper_plan=None,
-                    emit_images=False):
+def _run_epoch_body(spark, root, epoch, web, cfg, refs, host_tokens,
+                    selected, n_selected, _caches, fetch_adapter=None,
+                    scraper_plan=None, emit_images=False):
+    adapter = fetch_adapter or SynthWebAdapter(web)
+    robots = read_robots(spark, root, epoch - 1)
+    url_seen = read_url_seen(spark, root, epoch - 1)
     # ---- fetch + parse + canonicalize + payload (S4, one Arrow pass) ---
     fetch_fn, fetch_schema = _fetch_udf(web, fetch_adapter, scraper_plan,
                                         emit_images)
@@ -1093,13 +1131,10 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
     # not cores×K-sized, because every python task carries a measured
     # ~0.2-0.3 s of fixed overhead (Arrow stream + worker round-trip):
     # a 4-waves-per-core policy made the per-epoch overhead GROW with
-    # cluster width — the N-vs-4N ladder bills that directly to the wide
-    # side.  Partition count never changes results (politeness is
-    # enforced upstream), only task granularity.
+    # cluster width.  Partition count never changes results (politeness
+    # is enforced upstream), only task granularity.
     n_fetch = max(spark.sparkContext.defaultParallelism,
                   n_selected // 50_000 + 1)
-    if cfg.fetch_partitions is not None:
-        n_fetch = min(cfg.fetch_partitions, n_fetch)
     # cache: the fetch output feeds the fetch log, the link discoveries,
     # the metrics and the payload tables.  The dirty-bucket collect below
     # materializes it inside its own job, so fetching costs no separate
@@ -1119,34 +1154,24 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
         "status", "n_links", "n_images", "page_fp",
     )
 
-    # ---- discoveries: trap guard, robots-filter, dedup (J8) -------------
+    # ---- discoveries: admission (trap guard, robots) (J8) --------------
     # links arrive canonicalized from the fetch stage, unparseable hrefs
-    # already dropped; path rides along so the robots filter tests it
-    # directly instead of re-deriving it with a per-row parse_url
-    disc = _trap_filter(  # trap guard BEFORE robots: a trapped URL must
-        # not trigger a robots fetch for its host
+    # already dropped; path rides along for the robots filter
+    disc, robots_new = _admit(
+        spark,
         fetched.select(
             (F.col("depth") + 1).alias("depth"), F.explode("links").alias("l")
         ).select("depth", "l.url_canon", "l.host", "l.path"),
-        cfg,
+        robots, epoch + 1, cfg, adapter,
     )
-    robots_new = _robots_rules_df(
-        spark,
-        disc.select("host").join(robots.select("host"), "host", "left_anti"),
-        epoch + 1,
-        fetch_adapter or SynthWebAdapter(web),
-    ).cache()
     _caches.append(robots_new)
-    robots_all = robots.unionByName(robots_new)
-    disc = _filter_robots(disc, robots_all, fetch_adapter or SynthWebAdapter(web))
-    disc = _with_host_bucket(disc, cfg).withColumn(
-        "url_hash", F.xxhash64("url_canon")
-    ).withColumn("discovered_epoch", F.lit(epoch + 1))
     # within-epoch dedup happens INSIDE the seen-check cogroup (same
     # host_bucket key — saves a full groupBy(url_canon) exchange of the
     # raw delta); column order fixed here so the cogroup's output schema
     # is stable
-    adds = disc.select(*_IDENTITY_COLS)
+    adds = disc.withColumn("discovered_epoch", F.lit(epoch + 1)).select(
+        *_IDENTITY_COLS
+    )
 
     # ---- url_seen delta + cuckoo update (P10/E5) ------------------------
     seen_delta = selected.select(
@@ -1157,7 +1182,9 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
     # cache: the single cogroup output feeds the filters snapshot, the
     # fingerprint collect, AND both flag branches — without it the whole
     # discovery pipeline + blob rebuild would run once per consumer
-    fused = _update_and_split(filters, seen_delta, adds, cfg).cache()
+    fused = _update_and_split(
+        _read_filters(spark, root, epoch - 1), seen_delta, adds, cfg
+    ).cache()
     _caches.append(fused)
     filters_new = fused.filter(F.col("kind") == "f").select(
         "host_bucket", "blob", "fingerprint"
@@ -1218,102 +1245,40 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
     ).withColumn("epoch", F.lit(epoch))
 
     # ---- snapshot --------------------------------------------------------
-    # independent tables written as CONCURRENT Spark jobs (thread pool);
-    # the manifest below is the atomic completion marker, written only
-    # after every table commit succeeds, so resume safety is unchanged
-    d = _snap_dir(root, epoch)
-    writes = [
-        (seen_delta, "url_seen_delta"),
-        (fetch_log, "fetch_log"),
-        (robots_new, "robots_delta"),
-        (filters_new, "filters"),
-        (metrics, "metrics"),
-    ]
-    # the payload commits with the snapshot: a kill before the manifest
-    # leaves an incomplete epoch, never one missing its payload
-    writes += _payload_tables(fetched.filter(F.col("status") == 200),
-                              scraper_plan, emit_images)
-    # politeness token state — only when the bucket is non-degenerate
-    # (cap == refill keeps this table nonexistent and costs nothing)
-    cap, refill = _token_params(cfg)
-    if cap > refill:
-        sel_counts = selected.groupBy("host").agg(
-            F.count(F.lit(1)).alias("n_sel")
-        )
-        writes.append(
-            (_next_host_tokens(host_tokens, sel_counts, cfg), "host_tokens")
-        )
+    tables = {
+        "frontier": _frontier_layout(frontier_dirty, max(1, len(dirty))),
+        "url_seen_delta": seen_delta,
+        "fetch_log": fetch_log,
+        "robots_delta": robots_new,
+        "filters": filters_new,
+        "metrics": metrics,
+        # the payload commits with the snapshot: a kill before the
+        # manifest leaves an incomplete epoch, never one missing its payload
+        **_payload_tables(fetched.filter(F.col("status") == 200),
+                          scraper_plan, emit_images),
+        **_host_tokens_table(spark, host_tokens, selected, cfg),
+    }
     # periodic url_seen/robots compaction: fold base + all deltas (incl.
     # this epoch's) into a fresh base so reads stay O(seen_compact_every)
     # wide regardless of crawl age
     compact = (epoch + 1) % cfg.seen_compact_every == 0
     if compact:
-        writes.append((url_seen_all, "url_seen_base"))
-        writes.append((robots_all, "robots_base"))
-    seen_base = epoch if compact else _base_epoch(root, epoch - 1, "seen_base_epoch")
-    robots_base = (
-        epoch if compact else _base_epoch(root, epoch - 1, "robots_base_epoch")
+        tables["url_seen_base"] = url_seen_all
+        tables["robots_base"] = robots.unionByName(robots_new)
+    prev = _read_manifest(root, epoch - 1)
+    _commit_snapshot(
+        spark, root, epoch, tables,
+        {
+            "n_fetched": n_selected,
+            "filter_fingerprints": fingerprints,
+            "frontier_refs": {str(b): e for b, e in sorted(new_refs.items())},
+            "seen_base_epoch": epoch if compact else prev.get("seen_base_epoch"),
+            "robots_base_epoch": (
+                epoch if compact else prev.get("robots_base_epoch")
+            ),
+        },
     )
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(writes) + 1) as pool:
-        futs = [pool.submit(_write_frontier, fmt, frontier_dirty, d,
-                            max(1, len(dirty)))]
-        futs += [
-            pool.submit(
-                lambda df, name: fmt.write(df, os.path.join(d, name)), df, name
-            )
-            for df, name in writes
-        ]
-        for fut in futs:
-            fut.result()  # propagate failures before the manifest exists
-
-    with open(_manifest_path(root, epoch), "w") as f:
-        json.dump(
-            {
-                "epoch": epoch,
-                "n_fetched": n_selected,
-                "filter_fingerprints": fingerprints,
-                "frontier_refs": {str(b): e for b, e in sorted(new_refs.items())},
-                "seen_base_epoch": seen_base,
-                "robots_base_epoch": robots_base,
-            },
-            f,
-        )
     return n_selected
-
-
-def _write_empty_epoch(spark, root, epoch, refs, robots, filters,
-                       host_tokens, cfg, fmt):
-    """Nothing selected: carry every frontier bucket forward by reference
-    (zero frontier I/O) and write empty deltas so readers of this epoch
-    see complete tables.  The blob-lineage contract holds here too: this
-    is the FINAL snapshot of every completed crawl, so its manifest must
-    carry the same filter_fingerprints keys as every other epoch."""
-    d = _snap_dir(root, epoch)
-    cap, refill = _token_params(cfg)
-    if cap > refill:
-        # refill still ticks on an empty epoch (tokens accrue with time)
-        empty_counts = spark.createDataFrame([], "host string, n_sel long")
-        fmt.write(_next_host_tokens(host_tokens, empty_counts, cfg),
-                  os.path.join(d, "host_tokens"))
-    fmt.write_empty(spark, os.path.join(d, "url_seen_delta"), SEEN_SCHEMA)
-    fmt.write_empty(spark, os.path.join(d, "fetch_log"), FETCHLOG_SCHEMA)
-    fmt.write_empty(spark, os.path.join(d, "robots_delta"), ROBOTS_SCHEMA)
-    fmt.write(filters, os.path.join(d, "filters"))
-    fingerprints = _collect_fingerprints(filters)
-    with open(_manifest_path(root, epoch), "w") as f:
-        json.dump(
-            {
-                "epoch": epoch,
-                "n_fetched": 0,
-                "filter_fingerprints": fingerprints,
-                "frontier_refs": {str(b): e for b, e in sorted(refs.items())},
-                "seen_base_epoch": _base_epoch(root, epoch - 1, "seen_base_epoch"),
-                "robots_base_epoch": _base_epoch(root, epoch - 1, "robots_base_epoch"),
-            },
-            f,
-        )
 
 
 def run_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
@@ -1398,7 +1363,8 @@ def _run_payload_stages(spark: SparkSession, root: str, epoch: int,
     # cache: both payload tables read the one refetch
     pages = urls.mapInPandas(_refetch, schema).cache()
     try:
-        for df, name in _payload_tables(pages, scraper_plan, emit_images):
+        for name, df in _payload_tables(pages, scraper_plan,
+                                        emit_images).items():
             fmt.write(df, os.path.join(d, name))
     finally:
         pages.unpersist()

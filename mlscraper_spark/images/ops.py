@@ -51,19 +51,11 @@ def extract_images_table(pages_df: DataFrame, page_id_col: str = "url_canon",
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from mlscraper_spark.crawl.synthweb import extract_images
-        from mlscraper_spark.images.codec import decode, encode, make_image, phash
 
         for pdf in batches:
             rows = []
-            for pid, html in zip(pdf[page_id_col], pdf[html_col]):
-                for im in extract_images(bytes(html)):
-                    image_id = im["src"]
-                    w, h = im["w"], im["h"]
-                    fmt = policy(image_id, w, h)
-                    img = make_image(image_id, w, h)
-                    blob = encode(img, fmt)
-                    ph = phash(decode(blob, fmt))
-                    rows.append((image_id, blob, w, h, fmt, im["caption"], ph))
+            for html in pdf[html_col]:
+                rows += image_rows(extract_images(bytes(html)), policy)
             yield pd.DataFrame(
                 rows, columns=[f.name for f in IMAGES_SCHEMA.fields]
             )
@@ -71,10 +63,11 @@ def extract_images_table(pages_df: DataFrame, page_id_col: str = "url_canon",
     return pages_df.select(page_id_col, html_col).mapInPandas(_run, IMAGES_SCHEMA)
 
 
-def image_rows(images: list[dict]) -> list[tuple]:
+def image_rows(images: list[dict], fmt_policy=default_fmt_policy) -> list[tuple]:
     """IMAGES_SCHEMA rows for one page's ``<img>`` dicts
-    (``synthweb.images_in``): pixels from the synthetic store, the default
-    format policy, phash of the decoded pixels.  Shared by
+    (``synthweb.images_in`` / ``extract_images``): pixels from the
+    synthetic store, the format ``fmt_policy(image_id, w, h)`` picks,
+    phash of the decoded pixels.  Shared by ``extract_images_table``,
     ``fetch_and_extract_images`` and the crawl's fetch stage."""
     from mlscraper_spark.images.codec import decode, encode, make_image, phash
 
@@ -82,7 +75,7 @@ def image_rows(images: list[dict]) -> list[tuple]:
     for im in images:
         image_id = im["src"]
         w, h = im["w"], im["h"]
-        fmt = default_fmt_policy(image_id, w, h)
+        fmt = fmt_policy(image_id, w, h)
         blob = encode(make_image(image_id, w, h), fmt)
         rows.append((image_id, blob, w, h, fmt, im["caption"],
                      phash(decode(blob, fmt))))

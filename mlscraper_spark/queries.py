@@ -1985,14 +1985,15 @@ def _q45_setup():
 def q45_crawl_extract(spark, sf_dir):
     """Trained-scraper inference INSIDE the crawl loop (north_star fusion):
     ``run_crawl(scraper_plan=...)`` applies the broadcast plan to every
-    page fetched in an epoch, in that epoch's payload stage, writing the
-    ``extractions`` table next to the fetch log.  Output is one row per
+    page fetched in an epoch, inside that epoch's fetch stage (the same
+    parse as the link scan), writing the ``extractions`` table with the
+    epoch's snapshot, next to the fetch log.  Output is one row per
     crawled page with its extracted JSON — the driver hash covers the
     exact (url set, values) the fused pipeline produced.
 
     Scale shape: extraction is one Arrow stage over the epoch's fetched
     URLs (fetch+parse+extract fused, HTML never crosses into the JVM),
-    zero extra shuffle; the crawl itself is the ladder-measured engine.
+    zero extra shuffle.
     ``sf_dir`` is unused — the input is the deterministic synthetic web,
     the same corpus the bit-for-bit crawl tests pin."""
     import tempfile

@@ -193,7 +193,6 @@ def generate_unique_selectors_for_nodes(
     complexity: int,
     indexes: dict[str, _PageSelectorIndex] | None = None,
     spark=None,
-    spark_threshold: int | None = None,
 ):
     """selectors.py:78-98 — yields css rule strings that uniquely select the
     given nodes under the given roots.
@@ -201,14 +200,14 @@ def generate_unique_selectors_for_nodes(
     ``targets`` are (page_key, dom, node_id); ``roots`` are (page_key,
     root_id) parallel to targets, or None for whole pages
     (selectors.py:84-86).  With a ``spark`` session and a candidate set of
-    at least ``spark_threshold`` rules, verification fans out as a Spark
-    job (J6 at scale); the yielded rule sequence is identical either way.
+    at least ``SPARK_VERIFY_THRESHOLD`` rules, verification fans out as a
+    Spark job (J6 at scale); the yielded rule sequence is identical either
+    way.
     """
     doms, ordered, root_groups = _candidates_and_groups(
         targets, roots, complexity, indexes
     )
-    threshold = SPARK_VERIFY_THRESHOLD if spark_threshold is None else spark_threshold
-    if spark is not None and len(ordered) >= threshold:
+    if spark is not None and len(ordered) >= SPARK_VERIFY_THRESHOLD:
         yield from _verify_unique_selectors_spark(spark, doms, ordered, root_groups)
         return
     for rule in ordered:

@@ -53,13 +53,13 @@ def get_match_combination_priority(matches) -> float:
 
 def train_scraper(training_set: TrainingSet, complexity: int = 100,
                   value_match_index: dict | None = None,
-                  spark=None, spark_verify_threshold: int | None = None) -> dict:
+                  spark=None) -> dict:
     """training.py:36-78 — returns a scraper *plan* (scrapers.py grammar).
 
     With ``spark`` given, the selector-uniqueness verification (J6) fans
-    out as a Spark job whenever a candidate set exceeds
-    ``spark_verify_threshold`` (default selectors.SPARK_VERIFY_THRESHOLD);
-    the resulting plan is identical to the inline path's."""
+    out as a Spark job whenever a candidate set reaches
+    ``selectors.SPARK_VERIFY_THRESHOLD``; the resulting plan is identical
+    to the inline path's."""
     samples = training_set.item.samples
     sample_matches = [
         sorted(s.get_matches(value_match_index), key=lambda m: m.span)[
@@ -81,7 +81,7 @@ def train_scraper(training_set: TrainingSet, complexity: int = 100,
         try:
             return train_scraper_for_matches(
                 list(match_combination), roots, doms, complexity, indexes,
-                spark=spark, spark_verify_threshold=spark_verify_threshold,
+                spark=spark,
             )
         except NoScraperFoundException as e:
             last_err = e
@@ -89,8 +89,7 @@ def train_scraper(training_set: TrainingSet, complexity: int = 100,
 
 
 def train_scraper_for_matches(matches, roots, doms, complexity, indexes,
-                              spark=None,
-                              spark_verify_threshold: int | None = None) -> dict:
+                              spark=None) -> dict:
     """training.py:81-209.
 
     ``matches``: Match objects (one per root); ``roots``: (page_key, node_id)
@@ -123,7 +122,7 @@ def train_scraper_for_matches(matches, roots, doms, complexity, indexes,
         rule = next(
             generate_unique_selectors_for_nodes(
                 targets, roots, complexity, indexes,
-                spark=spark, spark_threshold=spark_verify_threshold,
+                spark=spark,
             ),
             None,
         )
@@ -143,7 +142,7 @@ def train_scraper_for_matches(matches, roots, doms, complexity, indexes,
             try:
                 children[k] = train_scraper_for_matches(
                     matches_per_key, roots, doms, complexity, indexes,
-                    spark=spark, spark_verify_threshold=spark_verify_threshold,
+                    spark=spark,
                 )
             except NoScraperFoundException as e:
                 raise NoScraperFoundException(f"DictScraper failed ({k=})") from e
@@ -161,7 +160,7 @@ def train_scraper_for_matches(matches, roots, doms, complexity, indexes,
         rule = next(
             generate_unique_selectors_for_nodes(
                 item_targets, item_outer_roots, complexity, indexes,
-                spark=spark, spark_threshold=spark_verify_threshold,
+                spark=spark,
             ),
             None,
         )
@@ -173,7 +172,7 @@ def train_scraper_for_matches(matches, roots, doms, complexity, indexes,
         item_roots = [(im.page_key, im.root) for im, _ in item_match_and_roots]
         item_plan = train_scraper_for_matches(
             item_matches, item_roots, doms, complexity, indexes,
-            spark=spark, spark_verify_threshold=spark_verify_threshold,
+            spark=spark,
         )
         return list_plan(css_selector(rule), item_plan)
 

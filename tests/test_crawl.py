@@ -179,6 +179,45 @@ def test_run_epoch_driver_job_count(spark, tmp_path):
     assert jobs == [EPOCH_DRIVER_JOBS] * 2
 
 
+def test_final_empty_epoch_manifest_carries_lineage(spark, tmp_path):
+    """The final, empty epoch of a crawl run to exhaustion rewrites the
+    previous snapshot's filters table unchanged, so its manifest must be
+    the previous one's in everything but ``epoch`` and ``n_fetched`` —
+    and its ``filter_fingerprints`` the md5 of its own filter blobs."""
+    import hashlib
+    import json as _json
+    import os
+
+    from mlscraper_spark.crawl.engine import FILTERS_SCHEMA, _manifest_path
+    from mlscraper_spark.tables import get_table_format
+
+    web = WebConfig(n_hosts=4, max_pages_per_host=6)
+    cfg = CrawlConfig(budget_per_host=2, tokens_capacity=3,
+                      seen_compact_every=2)
+    root = str(tmp_path / "exhaust")
+    run_crawl(spark, root, web.seeds(4), web, cfg, max_epochs=30)
+    last = last_complete_epoch(root)
+
+    def manifest(e):
+        with open(_manifest_path(root, e)) as f:
+            return _json.load(f)
+
+    final, prev = manifest(last), manifest(last - 1)
+    assert final["n_fetched"] == 0 and prev["n_fetched"] > 0
+    drop = ("epoch", "n_fetched")
+    assert ({k: v for k, v in final.items() if k not in drop}
+            == {k: v for k, v in prev.items() if k not in drop})
+    filters = get_table_format(spark).read(
+        spark, [os.path.join(root, f"snap_{last + 1:05d}", "filters")],
+        FILTERS_SCHEMA,
+    ).collect()
+    assert filters
+    assert final["filter_fingerprints"] == {
+        str(r.host_bucket): hashlib.md5(bytes(r.blob)).hexdigest()
+        for r in filters
+    }
+
+
 def test_partial_snapshot_is_ignored(tmp_path):
     root = tmp_path / "partial"
     (root / "snap_00003").mkdir(parents=True)  # no manifest → incomplete
@@ -953,8 +992,7 @@ def test_engine_robots_filter_matches_python_predicate(spark):
     including Allow rules, length ties, and empty paths — or the engine
     would diverge from an HttpFetchAdapter-governed oracle."""
     import json as _json
-
-    from pyspark.sql import functions as F
+    from urllib.parse import urlsplit
 
     from mlscraper_spark.crawl.engine import _filter_robots
     from mlscraper_spark.crawl.fetchers import robots_blocked
@@ -969,14 +1007,15 @@ def test_engine_robots_filter_matches_python_predicate(spark):
     paths = ["/a", "/a/b", "/a/b/c/d", "/a/bq", "/x/y", "/private/3",
              "/only-allow/z", "/", "", "/q?k=v"]
     rows = [(f"http://{h}{p}", h) for h in rule_sets for p in paths]
-    df = spark.createDataFrame(rows, "url_canon string, host string")
+    # the engine's frames carry the canonicalizer's path, urlsplit().path
+    df = spark.createDataFrame(
+        [(u, h, urlsplit(u).path) for u, h in rows],
+        "url_canon string, host string, path string")
     robots = spark.createDataFrame(
         [(h, _json.dumps(r), 0) for h, r in rule_sets.items()],
         "host string, rules_json string, fetched_epoch int")
     kept = {r.url_canon for r in _filter_robots(df, robots).collect()}
     for u, h in rows:
-        from urllib.parse import urlsplit
-
         want_blocked = robots_blocked(urlsplit(u).path, rule_sets[h])
         assert (u not in kept) == want_blocked, (u, rule_sets[h])
 

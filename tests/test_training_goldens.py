@@ -1,7 +1,8 @@
 """The reference's end-to-end training goldens, ported from
 /root/reference/tests/test_training.py (all five) plus the offline quotes
 example (tests/test_examples.py:8-18)."""
-from mlscraper_spark.fixtures import quotes_author_page
+from mlscraper_spark.fixtures import QUOTES_AUTHORS, quotes_author_page
+from mlscraper_spark.training import selectors
 from mlscraper_spark.training.matches import PAGE_ROOT
 from mlscraper_spark.training.samples import Sample, SamplePage, TrainingSet
 from mlscraper_spark.training.scrapers import apply_plan, apply_plan_to_html
@@ -73,7 +74,7 @@ def test_train_scraper_github():
     assert apply_plan_to_html(target, plan) == GITHUB_PROFILES["jonashaag"]
 
 
-def test_github_golden_via_spark_verification(spark):
+def test_github_golden_via_spark_verification(spark, monkeypatch):
     """J6 distributed: force EVERY uniqueness verification through the
     Spark fan-out (threshold 0) and require the exact plan the inline
     path trains, plus the same third-profile extraction."""
@@ -82,10 +83,34 @@ def test_github_golden_via_spark_verification(spark):
         for login in ["lorey", "siboehm"]
     ]
     plan_inline = _train(pv, complexity=2)
-    plan_spark = _train(pv, complexity=2, spark=spark, spark_verify_threshold=0)
+    monkeypatch.setattr(selectors, "SPARK_VERIFY_THRESHOLD", 0)
+    plan_spark = _train(pv, complexity=2, spark=spark)
     assert plan_spark == plan_inline
     target = reference_fixture("github/jonashaag.html")
     assert apply_plan_to_html(target, plan_spark) == GITHUB_PROFILES["jonashaag"]
+
+
+def test_quotes_via_spark_verification(spark, monkeypatch):
+    """The same fan-out on repo-owned pages, so it runs without the
+    reference fixtures: train on two author pages with every uniqueness
+    verification forced through Spark, require the inline plan, and
+    extract the third author's page."""
+    pv = [(quotes_author_page(k), {f: QUOTES_AUTHORS[k][f] for f in
+                                   ("name", "born")})
+          for k in ("einstein", "rowling")]
+    plan_inline = _train(pv)
+    calls = []
+    fan_out = selectors._verify_unique_selectors_spark
+    monkeypatch.setattr(selectors, "SPARK_VERIFY_THRESHOLD", 0)
+    monkeypatch.setattr(selectors, "_verify_unique_selectors_spark",
+                        lambda *a: calls.append(1) or fan_out(*a))
+    plan_spark = _train(pv, spark=spark)
+    assert calls, "no verification went through the Spark fan-out"
+    assert plan_spark == plan_inline
+    assert apply_plan_to_html(quotes_author_page("austen"), plan_spark) == {
+        "name": "Jane Austen",
+        "born": "December 16, 1775",
+    }
 
 
 def test_quotes_example_offline():
